@@ -18,7 +18,7 @@ from ufload_spark.sources.loader import (
     stage_and_publish,
 )
 from ufload_spark.sources.tables import table
-from ufload_spark.sources.zipsource import zip_listing
+from ufload_spark.sources.zipsource import zip_listing, zip_peek
 
 
 def test_publish_then_atomic_replace(spark, tmp_path):
@@ -395,6 +395,11 @@ def test_zip_corruption_flagged(spark, tmp_path):
     # the reference requires exactly one member (cloud.py:221-228)
     assert not rows["multi.zip"]["ok"] and rows["multi.zip"]["n_members"] == 2
     assert not rows["corrupt.zip"]["ok"]
+    # the driver-side peek reads only the central directory, and agrees
+    for name, row in rows.items():
+        assert zip_peek(spark, str(tmp_path / name)) == (
+            row["ok"], row["n_members"], row["member"], row["uncompressed_size"]
+        ), name
 
 
 def test_normalize_ts_dtype_matrix(spark, tmp_path):

@@ -755,7 +755,8 @@ def _lpa_edges_and_labels(
 
 def _publish_release(spark, result: DataFrame, name: str, cached) -> DataFrame:
     """Materialize a bucketed tier's audit-sized result through the staged
-    loader, RELEASE every cache the rounds accumulated, and return the
+    loader, RELEASE every cache the rounds accumulated (persisted and
+    local-checkpointed frames alike), and return the
     published frame (r10 VERDICT ask #5 — the r8 LPA publish-path leak
     class: a registered query in a long-lived session must not leave
     persistent RDDs behind after its result is consumed). The write is
@@ -770,6 +771,11 @@ def _publish_release(spark, result: DataFrame, name: str, cached) -> DataFrame:
     stage_and_publish(spark, result, target)
     for df in cached:
         df.unpersist()
+        # a local checkpoint keeps its blocks in the persisted RDD behind
+        # its LogicalRDD leaf, which DataFrame.unpersist() does not reach
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.nodeName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
     return spark.read.parquet(target)
 
 
@@ -1642,6 +1648,7 @@ def graph_kcore_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").cast("bigint").alias("d"))
             .localCheckpoint(eager=False)
         )
+        cached.append(deg)
         deg_c = deg.where(F.col("node") % 2 == 0).select(
             F.col("node").alias("c"), "d"
         )

@@ -11,14 +11,19 @@ that this repo had every PIECE green but never the CHAIN — this module is
 the chain:
 
     backup_candidates_top3  (rank-ordered probe list, listing.py)
- →  restore_first_viable    (probe-next-on-failure, loader.py — each
-                             attempt is a full stage→audit→publish; the
-                             ZIP gate IS the audit: a corrupt archive
-                             extracts to zero rows and a multi-member one
-                             to ≠1 rows, so the audit rejects it and the
-                             loop falls through, exactly the reference's
-                             ``continue``)
+ →  restore_first_viable    (probe-next-on-failure, loader.py — the
+                             loop falls through on a failed attempt,
+                             exactly the reference's ``continue``)
+ →  zip_peek                (driver-side central-directory read over
+                             ranged reads, zipsource.py — a corrupt or
+                             multi-member archive fails the attempt
+                             before any Spark job runs)
  →  zip_extract             (binaryFile → mapInPandas, zipsource.py)
+    → stage→audit→publish   (the ``expected_rows=1`` audit stays the gate
+                             of record behind the peek: an archive whose
+                             member does not read back — bad CRC or
+                             deflate stream, non-UTF-8 dump — extracts to
+                             zero rows and is rejected here)
  →  the full de-live suite  (all 12 ``delive_*`` steps, delive.py —
                              folded to one-row audit facts that land in
                              the report, so the oracle re-derives each
@@ -32,13 +37,14 @@ Determinism: the candidate ZIP fixtures are built once per fixture dir
 from the candidate list itself — an archive is deliberately corrupted
 (garbage bytes) when ``second(mtime) % 3 == 0`` and given two members when
 ``second(mtime) % 5 == 0``, so DuckDB can PREDICT which candidate wins
-while Spark DISCOVERS it through real failed publishes. A hash-match
-therefore proves the probe loop, the audit gate, and the publish path all
-behaved, not just that some aggregate agrees.
+while the engine DISCOVERS it through real failed attempts. A hash-match
+therefore proves the probe loop, the peek, and the audited publish path
+all behaved, not just that some aggregate agrees.
 
 Scale posture: the candidate walk is driver-side CONTROL PLANE — ≤ 3
 rows per instance, the same client-side loop the reference runs
-(main.py:288-371); everything that touches data volume (the extract, the
+(main.py:288-371), and each peek reads an archive's central directory
+(bytes, not the dump); everything that touches data volume (the extract, the
 de-live rewrites, the publish, the stale scan) is a distributed plan. At
 100 TB the per-instance dump extract is a binaryFile partition per
 archive and the de-live suite is narrow maps + broadcast joins
@@ -47,6 +53,7 @@ archive and the de-live suite is narrow maps + broadcast joins
 
 from __future__ import annotations
 
+import functools
 import io
 import os
 import shutil
@@ -189,14 +196,25 @@ def restore_one_instance(
     target: str,
 ) -> dict:
     """Probe-on-failure restore of ONE instance: each candidate's archive is
-    extracted (binaryFile → mapInPandas) and pushed through the audited
-    stage→publish; the first archive whose extract audits at exactly one
-    dump row is published, the rest of the probe list is never touched
-    (the reference's ``break`` at main.py:367). Returns the report row."""
-    from ufload_spark.sources.zipsource import zip_extract
+    peeked on the driver (central directory only) and, when it holds
+    exactly one member, extracted (binaryFile → mapInPandas) and pushed
+    through the audited stage→publish; the first archive whose extract
+    audits at exactly one dump row is published, the rest of the probe
+    list is never touched (the reference's ``break`` at main.py:367).
+    Returns the report row."""
+    from ufload_spark.sources.zipsource import zip_extract, zip_peek
 
     def build(s: SparkSession, cand) -> DataFrame:
-        return zip_extract(s, os.path.join(zips_dir, cand["name"]))
+        path = os.path.join(zips_dir, cand["name"])
+        ok, n_members, _, _ = zip_peek(s, path)
+        if not ok:
+            # the failed-attempt signal restore_first_viable falls through
+            # on; the archive is never staged
+            raise AuditError(
+                f"{cand['name']} holds {n_members} readable members, "
+                "expected exactly one"
+            )
+        return zip_extract(s, path)
 
     try:
         res = restore_first_viable(
@@ -234,13 +252,15 @@ def delive_audit_facts(
     """Run the de-live suite and fold every step to a one-row audit fact —
     computed FROM THE STEP OUTPUTS (not the base tables), so a report
     hash-match proves each sanitization actually executed with the
-    documented effect. All twelve frames are one-row aggregates; the fold
-    is a chain of broadcast cross joins (no shuffle). ``keep_logins`` /
-    ``logo_prefix`` / ``banner_text`` thread the reference's ``-pwlist`` /
-    ``-logo`` / ``-banner`` CLI content into the respective steps."""
+    documented effect. The fold is ONE aggregate: every enabled step's
+    output is projected to ``(step, v)`` and unioned, and each fact is a
+    ``count`` (row-count facts, 0 on an empty step) or a ``sum`` of the
+    per-row 0/1 condition (count-if facts, NULL on an empty step) filtered
+    to its step. ``keep_logins`` / ``logo_prefix`` / ``banner_text`` thread
+    the reference's ``-pwlist`` / ``-logo`` / ``-banner`` CLI content into
+    the respective steps."""
     from ufload_spark.operators import delive as dl
 
-    big = "bigint"
     pw_kwargs = {"keep_logins": keep_logins} if keep_logins is not None else {}
     lb_kwargs = {}
     if logo_prefix is not None:
@@ -251,74 +271,88 @@ def delive_audit_facts(
         banner_text if banner_text is not None else "THIS IS A SANDBOX COPY"
     )
 
-    def count_if(df: DataFrame, cond, alias: str) -> DataFrame:
-        return df.agg(
-            F.sum(F.when(cond, 1).otherwise(0)).cast(big).alias(alias)
-        )
-
-    facts: dict[str, DataFrame] = {
-        "password_stomp": count_if(
-            dl.delive_password_stomp(spark, sf_dir, **pw_kwargs),
-            F.col("active"),
+    # step -> (step output builder, fact column, the row condition a
+    # count-if fact counts; None for a row-count fact)
+    facts = {
+        "password_stomp": (
+            lambda: dl.delive_password_stomp(spark, sf_dir, **pw_kwargs),
             "active_users",
-        ),
-        "disable_cron": count_if(
-            dl.delive_disable_cron(spark, sf_dir),
             F.col("active"),
+        ),
+        "disable_cron": (
+            lambda: dl.delive_disable_cron(spark, sf_dir),
             "active_cron_jobs",
+            F.col("active"),
         ),
-        "hide_groups": dl.delive_hide_groups(spark, sf_dir).agg(
-            F.count("*").cast(big).alias("visible_membership_rows")
+        "hide_groups": (
+            lambda: dl.delive_hide_groups(spark, sf_dir),
+            "visible_membership_rows",
+            None,
         ),
-        "user_dept_join": count_if(
-            dl.delive_user_dept_join(spark, sf_dir),
-            F.col("context_department_id").isNotNull(),
+        "user_dept_join": (
+            lambda: dl.delive_user_dept_join(spark, sf_dir),
             "dept_linked_users",
+            F.col("context_department_id").isNotNull(),
         ),
-        "create_users": dl.delive_create_users(spark, sf_dir).agg(
-            F.count("*").cast(big).alias("created_users")
+        "create_users": (
+            lambda: dl.delive_create_users(spark, sf_dir),
+            "created_users",
+            None,
         ),
-        "logo_banner": count_if(
-            dl.delive_logo_banner(spark, sf_dir, **lb_kwargs),
-            F.col("banner").startswith(banner_probe),
+        "logo_banner": (
+            lambda: dl.delive_logo_banner(spark, sf_dir, **lb_kwargs),
             "banner_rows",
+            F.col("banner").startswith(banner_probe),
         ),
-        "sequence_bump": dl.delive_sequence_bump(spark, sf_dir).agg(
-            F.count("*").cast(big).alias("sequence_rows")
+        "sequence_bump": (
+            lambda: dl.delive_sequence_bump(spark, sf_dir),
+            "sequence_rows",
+            None,
         ),
-        "ilike_groups": dl.delive_ilike_groups(spark, sf_dir).agg(
-            F.count("*").cast(big).alias("hidden_groups")
+        "ilike_groups": (
+            lambda: dl.delive_ilike_groups(spark, sf_dir),
+            "hidden_groups",
+            None,
         ),
-        "sync_connection_override": count_if(
-            dl.delive_sync_connection_override(spark, sf_dir),
-            (F.col("protocol") == "xmlrpc") & ~F.col("automatic_patching"),
+        "sync_connection_override": (
+            lambda: dl.delive_sync_connection_override(spark, sf_dir),
             "sync_overridden",
+            (F.col("protocol") == "xmlrpc") & ~F.col("automatic_patching"),
         ),
-        "automation_blanking": count_if(
-            dl.delive_automation_blanking(spark, sf_dir),
-            ~F.col("ftp_ok") & (F.col("ftp_password") == ""),
+        "automation_blanking": (
+            lambda: dl.delive_automation_blanking(spark, sf_dir),
             "automation_blanked",
+            ~F.col("ftp_ok") & (F.col("ftp_password") == ""),
         ),
-        "backup_config_reset": count_if(
-            dl.delive_backup_config_reset(spark, sf_dir),
-            ~F.col("scheduledbackup") & ~F.col("beforemanualsync"),
+        "backup_config_reset": (
+            lambda: dl.delive_backup_config_reset(spark, sf_dir),
             "backup_flags_off",
+            ~F.col("scheduledbackup") & ~F.col("beforemanualsync"),
         ),
-        "sync_entity_relink": count_if(
-            dl.delive_sync_entity_relink(spark, sf_dir),
-            F.col("user_id").isNotNull(),
+        "sync_entity_relink": (
+            lambda: dl.delive_sync_entity_relink(spark, sf_dir),
             "relinked_entities",
+            F.col("user_id").isNotNull(),
         ),
     }
-    out = None
-    for step in DELIVE_STEPS:
-        if step not in steps:
-            continue
-        frame = facts[step]
-        out = frame if out is None else out.crossJoin(F.broadcast(frame))
-    if out is None:
+    enabled = [step for step in DELIVE_STEPS if step in steps]
+    if not enabled:
         raise ValueError("at least one de-live step must be enabled")
-    return out
+    tagged = []
+    aggs = []
+    for i, step in enumerate(enabled):
+        build, alias, cond = facts[step]
+        v = F.lit(None) if cond is None else F.when(cond, 1).otherwise(0)
+        tagged.append(
+            build().select(F.lit(i).alias("step"), v.cast("int").alias("v"))
+        )
+        hit = F.col("step") == i
+        if cond is None:
+            fact = F.count(F.when(hit, 1))
+        else:
+            fact = F.sum(F.when(hit, F.col("v")))
+        aggs.append(fact.cast("bigint").alias(alias))
+    return functools.reduce(DataFrame.union, tagged).agg(*aggs)
 
 
 _REPORT_SCHEMA = (

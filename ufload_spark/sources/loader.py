@@ -684,7 +684,8 @@ def restore_first_viable(
     candidate; each attempt runs the full stage→audit→publish discipline,
     so a failed candidate leaves no staging debris and never touches
     ``target`` (the audit failure IS the reference's failed-restore
-    signal). Returns ``{"published": <candidate name>, "rows": n,
+    signal). ``build`` may raise :class:`AuditError` itself to reject a
+    candidate before anything is staged. Returns ``{"published": <candidate name>, "rows": n,
     "attempts": [{"name", "ok", "err"} ...]}``; raises :class:`AuditError`
     when every candidate fails — with ``target`` exactly as it was.
     """

@@ -17,7 +17,10 @@ reads and bounded retry on top. The default opener handles ``file://`` and
 plain paths so everything is testable offline; :func:`make_http_opener`
 provides the authenticated ranged-HTTP transport (stdlib ``urllib`` with a
 ``Range:`` header — reference httpfile.py:26-37) behind the same interface,
-tested against a local ``http.server`` thread.
+tested against a local ``http.server`` thread. :func:`make_hadoop_opener`
+reads through the session's Hadoop ``FileSystem``, the storage the
+datasource layer scans, for driver-side peeks at files a Spark job may
+read next (the restore's ZIP central-directory peek).
 """
 
 from __future__ import annotations
@@ -98,6 +101,55 @@ def make_http_opener(
     return opener, sizer
 
 
+class _JavaStream(io.RawIOBase):
+    """Python file view of a JVM ``InputStream``: each ``read`` pulls one
+    byte range across py4j, ``close`` closes the JVM stream."""
+
+    def __init__(self, jstream):
+        self._jstream = jstream
+
+    def readable(self) -> bool:
+        return True
+
+    def read(self, n: int = -1) -> bytes:
+        if n < 0:
+            return bytes(self._jstream.readAllBytes())
+        return bytes(self._jstream.readNBytes(n))
+
+    def close(self) -> None:
+        if not self.closed:
+            self._jstream.close()
+        super().close()
+
+
+def make_hadoop_opener(spark) -> tuple[Opener, Callable[[str], int]]:
+    """(opener, sizer) pair over the Hadoop ``FileSystem`` the session
+    resolves for each URL — the storage ``binaryFile`` scans read, local,
+    HDFS or object store alike — so a driver-side ranged read reaches the
+    same bytes a distributed extract of that URL does. The opener is a
+    positioned ``FileSystem.open``, the sizer ``getFileStatus().getLen()``
+    (the reference's Range GET and HEAD, httpfile.py:14-37)."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+
+    def resolve(url: str):
+        jpath = jvm.org.apache.hadoop.fs.Path(url)
+        return jpath.getFileSystem(conf), jpath
+
+    def opener(url: str, offset: int) -> io.IOBase:
+        fs, jpath = resolve(url)
+        jstream = fs.open(jpath)
+        if offset:
+            jstream.seek(offset)
+        return _JavaStream(jstream)
+
+    def sizer(url: str) -> int:
+        fs, jpath = resolve(url)
+        return fs.getFileStatus(jpath).getLen()
+
+    return opener, sizer
+
+
 class RangeReader:
     """File-like random access over a remote object (reference
     httpfile.py:5-50): ``size``, ``seek``/``tell``, and ``read(n)`` served
@@ -128,14 +180,19 @@ class RangeReader:
 
     def seek(self, pos: int, whence: int = os.SEEK_SET) -> int:
         if whence == os.SEEK_SET:
-            self._pos = pos
+            new = pos
         elif whence == os.SEEK_CUR:
-            self._pos += pos
+            new = self._pos + pos
         elif whence == os.SEEK_END:
-            self._pos = self._size + pos
+            new = self._size + pos
         else:
             raise ValueError(f"bad whence {whence}")
-        return self._pos
+        if new < 0:
+            # as a local file does: ``zipfile`` looks for the end record
+            # 22 bytes before the end and treats this error as "too short"
+            raise OSError(f"seek to {new}, before the start of {self.url}")
+        self._pos = new
+        return new
 
     def read(self, n: int = -1) -> bytes:
         if n < 0:

@@ -16,6 +16,10 @@ unzips one dump at a time). Corrupt archives become flagged rows, not task
 failures — the reference's probe-next-on-failure loop needs the bad file
 *reported*, not the job killed.
 
+Before a single archive is staged, :func:`zip_peek` applies the same
+exactly-one-member rule on the driver from the archive's central directory
+alone, so a bad candidate costs a few ranged reads instead of a Spark job.
+
 The test fixture: deterministic single-member ZIPs derived from the
 ``documents`` table (doc_id < N, fixed timestamp), so introspection and
 extraction both have exact DuckDB oracles over ``documents``.
@@ -26,6 +30,7 @@ from __future__ import annotations
 import io
 import os
 import zipfile
+import zlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -34,6 +39,7 @@ from pyspark.sql import functions as F
 
 from ufload_spark.plans.registry import register
 from ufload_spark.session import tune
+from ufload_spark.sources.remote import RangeReader, make_hadoop_opener
 
 N_FIXTURE_ZIPS = 20
 _FIXED_DATE = (2020, 1, 1, 0, 0, 0)  # deterministic member timestamp
@@ -45,24 +51,27 @@ INTROSPECT_SCHEMA = (
 EXTRACT_SCHEMA = "zip_name string, member string, text string"
 
 
+def _introspect(fileobj) -> tuple:
+    """The reference's exactly-one-dump rule (cloud.py:221-228) applied to
+    the ZIP read from ``fileobj``, as the ``(ok, n_members, member,
+    uncompressed_size)`` tail of an :data:`INTROSPECT_SCHEMA` row: more or
+    fewer members is not-ok, and a file that is no ZIP has zero members."""
+    try:
+        with zipfile.ZipFile(fileobj) as z:
+            infos = z.infolist()
+    except zipfile.BadZipFile:
+        return False, 0, None, None
+    if len(infos) == 1:
+        return True, 1, infos[0].filename, infos[0].file_size
+    return False, len(infos), None, None
+
+
 def _introspect_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
-        rows = []
-        for path, content in zip(pdf["path"], pdf["content"]):
-            name = os.path.basename(path)
-            try:
-                with zipfile.ZipFile(io.BytesIO(content)) as z:
-                    infos = z.infolist()
-                    # the reference requires exactly one member
-                    # (cloud.py:221-228); more or fewer is not-ok
-                    if len(infos) == 1:
-                        rows.append(
-                            (name, True, 1, infos[0].filename, infos[0].file_size)
-                        )
-                    else:
-                        rows.append((name, False, len(infos), None, None))
-            except zipfile.BadZipFile:
-                rows.append((name, False, 0, None, None))
+        rows = [
+            (os.path.basename(path), *_introspect(io.BytesIO(content)))
+            for path, content in zip(pdf["path"], pdf["content"])
+        ]
         yield pd.DataFrame(
             rows,
             columns=["zip_name", "ok", "n_members", "member", "uncompressed_size"],
@@ -76,12 +85,17 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             name = os.path.basename(path)
             try:
                 with zipfile.ZipFile(io.BytesIO(content)) as z:
-                    for info in z.infolist():
-                        rows.append(
-                            (name, info.filename, z.read(info).decode("utf-8"))
-                        )
-            except zipfile.BadZipFile:
-                pass  # corrupt files are surfaced by the introspect pass
+                    members = [
+                        (name, info.filename, z.read(info).decode("utf-8"))
+                        for info in z.infolist()
+                    ]
+            except (zipfile.BadZipFile, zlib.error, UnicodeDecodeError):
+                # an archive that does not read back whole (no ZIP, a bad
+                # CRC or deflate stream, a member that is not UTF-8 text)
+                # extracts to zero rows: introspection flags it, and the
+                # restore's row-count audit rejects it
+                continue
+            rows.extend(members)
         yield pd.DataFrame(rows, columns=["zip_name", "member", "text"])
 
 
@@ -92,6 +106,19 @@ def zip_listing(spark: SparkSession, path_glob: str) -> DataFrame:
     return binary.select("path", "content").mapInPandas(
         _introspect_batches, schema=INTROSPECT_SCHEMA
     )
+
+
+def zip_peek(spark: SparkSession, path: str) -> tuple:
+    """:func:`zip_listing`'s ``(ok, n_members, member, uncompressed_size)``
+    for ONE archive, read on the driver without staging it: ``zipfile``
+    over a :class:`RangeReader` on the session's Hadoop ``FileSystem``
+    fetches only the end-of-central-directory record and the central
+    directory (three ranged reads for a healthy archive), never member
+    data — the reference's peek over HTTP Range requests (cloud.py:215-264
+    through httpfile.py). Member bytes are not checked: a bad CRC or a
+    non-text dump still passes here and fails the extract."""
+    opener, sizer = make_hadoop_opener(spark)
+    return _introspect(RangeReader(path, opener, sizer))
 
 
 def zip_extract(spark: SparkSession, path_glob: str) -> DataFrame:
