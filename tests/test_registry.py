@@ -103,21 +103,14 @@ def test_no_oracle_floor_divides_decimal_operands():
 
 
 def test_sweep_family_lists_are_registered_names():
-    """sweep.py's FIXEDPOINT / SKETCH close-ritual tiers must reference
-    real registry names — a typo would silently shrink the scale-edge
-    re-check loop (the tier that caught the EMD and HLL defects)."""
-    import importlib.util
-    import os
-
+    """The runner's FIXEDPOINT / SKETCH close-ritual tiers and its SPOT
+    list must reference real registry names — a typo would silently
+    shrink the scale-edge re-check loop (the tier that caught the EMD and
+    HLL defects) or turn a spot entry into a KeyError failure."""
+    from ufload_spark import runner
     from ufload_spark.plans.registry import load_all
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "sweep_mod", os.path.join(root, "sweep.py")
-    )
-    sweep = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(sweep)
     names = set(load_all())
-    for fam in ("FIXEDPOINT", "SKETCH"):
-        missing = [q for q in getattr(sweep, fam) if q not in names]
+    for fam in ("FIXEDPOINT", "SKETCH", "SPOT"):
+        missing = [q for q in getattr(runner, fam) if q not in names]
         assert not missing, f"{fam} names not in registry: {missing}"

@@ -201,10 +201,7 @@ def test_composed_report_matches_listing_prediction(spark):
         if viable and c["instance"] not in predicted:
             predicted[c["instance"]] = (c["name"], c["rn"])
     report = {
-        r["instance"]: r
-        for r in restore_instances(
-            spark, SF_DIR, publish_report=False
-        ).collect()
+        r["instance"]: r for r in restore_instances(spark, SF_DIR).collect()
     }
     assert set(report) == set(RESTORE_INSTANCES)
     for inst, row in report.items():

@@ -486,3 +486,41 @@ def test_gate_readers_skip_staging_debris(spark, tmp_path):
         r["fp"] for r in read_ingest_admitted(spark, target).collect()
     } == {"fpA", "fpB"}
     assert {r["doc_id"] for r in read_admitted(spark, target).collect()} == {4, 8}
+
+
+@pytest.mark.parametrize("gate", ["exact", "neardup"])
+@pytest.mark.parametrize("novel", [True, False], ids=["nonempty", "empty"])
+def test_gate_batch_releases_its_checkpoint(spark, tmp_path, gate, novel):
+    """One gate call leaves the session's persistent-RDD set as it found
+    it, whether the batch publishes survivors or none: the eager
+    checkpoint that serves the empty-check and the publish is released
+    explicitly, not left for a JVM GC that may never come in a long-lived
+    streaming session."""
+    from ufload_spark.operators.dedup import simhash_frame
+    from ufload_spark.streaming.jobs import ingest_gate_batch, neardup_gate_batch
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    corpus_docs = docs.where(F.col("doc_id") % 4 != 0)
+    if gate == "exact":
+        norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
+        index = corpus_docs.select(F.md5(norm).alias("fp")).distinct()
+        call = ingest_gate_batch
+    else:
+        index = simhash_frame(corpus_docs)
+        call = neardup_gate_batch
+    index = index.persist()
+    index.count()
+    # a batch of corpus docs is all duplicates: the gate admits nothing
+    batch = docs.where(F.col("doc_id") % 4 == 0) if novel else corpus_docs
+    target = str(tmp_path / "admitted")
+
+    def ids():
+        keys = spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
+        return {int(k) for k in keys}
+
+    before = ids()
+    call(batch, target, index, 0)
+    after = ids()
+    index.unpersist()
+    assert after == before
+    assert (tmp_path / "admitted" / "e000000").exists() == novel

@@ -17,7 +17,7 @@ importance-propagation sibling).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ufload_spark.plans.registry import register
@@ -46,6 +46,31 @@ WITH pairs AS (
   SELECT CAST(count(*) AS BIGINT) AS n FROM nodes
 )
 """
+
+
+# The bipartite purchase graph keeps customers and suppliers in ONE node-id
+# space by parity: customer c is node 2c (even), supplier s is node 2s + 1
+# (odd). Every Spark-side encode, side test and decode goes through these
+# helpers; the DuckDB oracles spell the same arithmetic out independently.
+def customer_node(custkey: str) -> Column:
+    return F.col(custkey) * 2
+
+
+def supplier_node(suppkey: str) -> Column:
+    return F.col(suppkey) * 2 + 1
+
+
+def is_customer_node(node: str) -> Column:
+    return F.col(node) % 2 == 0
+
+
+def is_supplier_node(node: str) -> Column:
+    return F.col(node) % 2 == 1
+
+
+def entity_key(node: str) -> Column:
+    """The customer or supplier key a node id encodes."""
+    return F.expr(f"{node} div 2")
 
 
 def _pr_oracle() -> str:
@@ -90,8 +115,8 @@ def _build_pagerank_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .groupBy(
-            (F.col("o_custkey") * 2).alias("c_node"),
-            (F.col("l_suppkey") * 2 + 1).alias("s_node"),
+            customer_node("o_custkey").alias("c_node"),
+            supplier_node("l_suppkey").alias("s_node"),
         )
         .agg(F.count("*").alias("w"))
     )
@@ -205,10 +230,10 @@ def graph_pagerank_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     return ranks.select(
         "node",
-        F.when(F.col("node") % 2 == 0, F.lit("customer"))
+        F.when(is_customer_node("node"), F.lit("customer"))
         .otherwise(F.lit("supplier"))
         .alias("node_type"),
-        F.expr("node div 2").cast("bigint").alias("entity_key"),
+        entity_key("node").cast("bigint").alias("entity_key"),
         F.col("r").cast("bigint").alias("rank_micro"),
     )
 
@@ -317,10 +342,10 @@ def graph_pagerank_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     return ranks.select(
         "node",
-        F.when(F.col("node") % 2 == 0, F.lit("customer"))
+        F.when(is_customer_node("node"), F.lit("customer"))
         .otherwise(F.lit("supplier"))
         .alias("node_type"),
-        F.expr("node div 2").cast("bigint").alias("entity_key"),
+        entity_key("node").cast("bigint").alias("entity_key"),
         F.col("r").cast("bigint").alias("rank_micro"),
     )
 
@@ -422,7 +447,7 @@ def graph_ppr_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds = (
         table(spark, sf_dir, "supplier")
         .where(F.col("s_nationkey") == PPR_SEED_NATION)
-        .select((F.col("s_suppkey") * 2 + 1).alias("node"))
+        .select(supplier_node("s_suppkey").alias("node"))
         .distinct()
     )
     # seeds that trade (appear in the graph) — keeps both engines on the
@@ -472,10 +497,10 @@ def graph_ppr_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
         ranks.where(F.col("r") > 0)
         .select(
             "node",
-            F.when(F.col("node") % 2 == 0, F.lit("customer"))
+            F.when(is_customer_node("node"), F.lit("customer"))
             .otherwise(F.lit("supplier"))
             .alias("node_type"),
-            F.expr("node div 2").cast("bigint").alias("entity_key"),
+            entity_key("node").cast("bigint").alias("entity_key"),
             F.col("r").cast("bigint").alias("rank_micro"),
         )
     )
@@ -765,17 +790,15 @@ def _publish_release(spark, result: DataFrame, name: str, cached) -> DataFrame:
     the extra write+read is bounded.
     ``tests/test_scale.py::test_bucketed_tiers_release_their_caches``
     pins the contract."""
-    from ufload_spark.sources.loader import _scratch_unique, stage_and_publish
+    from ufload_spark.sources.loader import (
+        _scratch_unique,
+        release,
+        stage_and_publish,
+    )
 
     target = _scratch_unique(name)
     stage_and_publish(spark, result, target)
-    for df in cached:
-        df.unpersist()
-        # a local checkpoint keeps its blocks in the persisted RDD behind
-        # its LogicalRDD leaf, which DataFrame.unpersist() does not reach
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.nodeName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
+    release(cached)
     return spark.read.parquet(target)
 
 
@@ -1175,7 +1198,7 @@ def _bfs_rounds(
     sup = table(spark, sf_dir, "supplier")
     dist = (
         sup.where(F.col("s_nationkey") == BFS_SEED_NATION)
-        .select((F.col("s_suppkey") * 2 + 1).alias("node"))
+        .select(supplier_node("s_suppkey").alias("node"))
         .distinct()
         .select("node", F.lit(0).cast("bigint").alias("d"))
     )
@@ -1507,7 +1530,7 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda: _build_pagerank_edges(spark, sf_dir),
             )
         )
-        .where(F.col("src") % 2 == 0)
+        .where(is_customer_node("src"))
         .select(F.col("src").alias("c"), F.col("dst").alias("s"))
     )
     pairs = pairs.localCheckpoint(eager=False)
@@ -1536,10 +1559,10 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").cast("bigint").alias("d"))
             .localCheckpoint(eager=False)
         )
-        deg_c = deg.where(F.col("node") % 2 == 0).select(
+        deg_c = deg.where(is_customer_node("node")).select(
             F.col("node").alias("c"), "d"
         )
-        deg_s = deg.where(F.col("node") % 2 == 1).select(
+        deg_s = deg.where(is_supplier_node("node")).select(
             F.col("node").alias("s"), "d"
         )
         out.append(stats_from(deg_c, deg_s, rnd))
@@ -1616,7 +1639,7 @@ def graph_kcore_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan while preserving the partitioning the semi alternation rides
     pairs = (
         spark.table(_bucketed_edges_table(spark, sf_dir))
-        .where(F.col("src") % 2 == 0)
+        .where(is_customer_node("src"))
         .select(F.col("src").alias("c"), F.col("dst").alias("s"))
         .persist()
     )
@@ -1649,10 +1672,10 @@ def graph_kcore_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=False)
         )
         cached.append(deg)
-        deg_c = deg.where(F.col("node") % 2 == 0).select(
+        deg_c = deg.where(is_customer_node("node")).select(
             F.col("node").alias("c"), "d"
         )
-        deg_s = deg.where(F.col("node") % 2 == 1).select(
+        deg_s = deg.where(is_supplier_node("node")).select(
             F.col("node").alias("s"), "d"
         )
         out.append(_kcore_stats(deg_c, deg_s, rnd))
@@ -1768,8 +1791,8 @@ def graph_degree_powerlaw(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         li.join(o, li["l_orderkey"] == o["o_orderkey"])
         .select(
-            (F.col("o_custkey") * 2).alias("c"),
-            (F.col("l_suppkey") * 2 + 1).alias("s"),
+            customer_node("o_custkey").alias("c"),
+            supplier_node("l_suppkey").alias("s"),
         )
         .distinct()
     )
@@ -1883,8 +1906,8 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         li.join(o, li["l_orderkey"] == o["o_orderkey"])
         .select(
-            (F.col("o_custkey") * 2).alias("c"),
-            (F.col("l_suppkey") * 2 + 1).alias("s"),
+            customer_node("o_custkey").alias("c"),
+            supplier_node("l_suppkey").alias("s"),
         )
         .distinct()
     )
@@ -2002,8 +2025,8 @@ def graph_strong_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     strong = (
         li.join(o, li["l_orderkey"] == o["o_orderkey"])
         .groupBy(
-            (F.col("o_custkey") * 2).alias("u"),
-            (F.col("l_suppkey") * 2 + 1).alias("v"),
+            customer_node("o_custkey").alias("u"),
+            supplier_node("l_suppkey").alias("v"),
         )
         .agg(F.count("*").alias("w"))
         .where(F.col("w") >= STRONG_W)
@@ -2012,10 +2035,10 @@ def graph_strong_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     comp = min_label_components(strong)
     return comp.groupBy(F.col("m").alias("cluster_id")).agg(
         F.count("*").cast("bigint").alias("n_members"),
-        F.sum(F.when(F.col("n") % 2 == 0, 1).otherwise(0))
+        F.sum(F.when(is_customer_node("n"), 1).otherwise(0))
         .cast("bigint")
         .alias("n_customers"),
-        F.sum(F.when(F.col("n") % 2 == 1, 1).otherwise(0))
+        F.sum(F.when(is_supplier_node("n"), 1).otherwise(0))
         .cast("bigint")
         .alias("n_suppliers"),
     )
@@ -2113,10 +2136,10 @@ def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda: _build_pagerank_edges(spark, sf_dir),
             )
         )
-        .where(F.col("src") % 2 == 0)  # directed half: customer -> supplier
+        .where(is_customer_node("src"))  # directed half: customer -> supplier
         .select(
-            F.expr("src div 2").alias("c"),
-            F.expr("dst div 2").alias("s"),
+            entity_key("src").alias("c"),
+            entity_key("dst").alias("s"),
             "w",
         )
         .persist()

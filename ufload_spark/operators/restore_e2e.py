@@ -367,7 +367,6 @@ def restore_instances(
     instances=RESTORE_INSTANCES,
     *,
     delive_steps=DELIVE_STEPS,
-    publish_report: bool = True,
     clean_stale: bool = True,
     delive_content: dict | None = None,
 ) -> DataFrame:
@@ -447,8 +446,6 @@ def restore_instances(
             spark, sf_dir, steps=delive_steps, **(delive_content or {})
         )
         out = out.crossJoin(F.broadcast(audits))
-    if not publish_report:
-        return out
     # the report itself exits through the audited sink and is read back
     # from the published copy — the oracle checks the POST-publish bytes
     final = _scratch_unique(f"restore_report_{sfbase}")

@@ -90,6 +90,13 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def local_master() -> str:
+    """``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``): the master every
+    session this repo builds for itself runs on."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return f"local[{cpus}]" if cpus else "local[*]"
+
+
 def get_spark(
     app_name: str = "ufload_spark",
     master: str | None = None,
@@ -109,10 +116,9 @@ def get_spark(
     matching the harness environment; on a real cluster the master comes from
     spark-submit and this argument is left None.
     """
-    if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS")
-        master = f"local[{cpus}]" if cpus else "local[*]"
-    builder = SparkSession.builder.appName(app_name).master(master)
+    builder = SparkSession.builder.appName(app_name).master(
+        master or local_master()
+    )
     conf = {**BUILD_CONF, **RUNTIME_CONF}
     if driver_memory is not None:
         conf["spark.driver.memory"] = driver_memory

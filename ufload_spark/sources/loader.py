@@ -187,6 +187,20 @@ def stage_and_publish(
         raise
 
 
+def release(frames) -> None:
+    """Free the blocks behind persisted and local-checkpointed frames, without
+    blocking. A local checkpoint keeps its blocks in the persisted RDD behind
+    its ``LogicalRDD`` leaf, which ``DataFrame.unpersist()`` does not reach,
+    so that RDD is unpersisted directly. Until a frame is released its blocks
+    are only freed when a JVM GC collects the RDD, which may be never in a
+    long-lived session."""
+    for df in frames:
+        df.unpersist()
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.nodeName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
+
+
 # --- pointer-file publish: no reader-visible gap, ever ---------------------
 
 

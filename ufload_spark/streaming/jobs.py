@@ -838,7 +838,7 @@ def ingest_gate_batch(
     rows (the per-batch result is a pure function of batch × static
     index), which is the foreachBatch exactly-once contract."""
     s = batch.sparkSession
-    from ufload_spark.sources.loader import stage_and_publish
+    from ufload_spark.sources.loader import release, stage_and_publish
 
     norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
     rows = (
@@ -855,9 +855,11 @@ def ingest_gate_batch(
     # eager checkpoint before the empty-gate — isEmpty() + publish ran the
     # batch pipeline twice (see neardup_gate_batch, r12)
     rows = rows.localCheckpoint()
-    if rows.isEmpty():
-        return
-    stage_and_publish(s, rows, f"{target}/e{int(epoch_id):06d}")
+    try:
+        if not rows.isEmpty():
+            stage_and_publish(s, rows, f"{target}/e{int(epoch_id):06d}")
+    finally:
+        release([rows])
 
 
 def _epoch_segments(spark: SparkSession, target: str) -> DataFrame:
@@ -1032,7 +1034,7 @@ def neardup_gate_batch(
         SEG_BITS,
         simhash_frame,
     )
-    from ufload_spark.sources.loader import stage_and_publish
+    from ufload_spark.sources.loader import release, stage_and_publish
 
     sims = simhash_frame(batch.select("doc_id", "text")).join(
         batch.select("doc_id", "source"), "doc_id"
@@ -1083,9 +1085,11 @@ def neardup_gate_batch(
     # serves both; the frame is batch-sized. (The guard itself must stay:
     # stage_and_publish AUDITS against empty frames by design.)
     rows = rows.localCheckpoint()
-    if rows.isEmpty():
-        return
-    stage_and_publish(s, rows, f"{target}/e{int(epoch_id):06d}")
+    try:
+        if not rows.isEmpty():
+            stage_and_publish(s, rows, f"{target}/e{int(epoch_id):06d}")
+    finally:
+        release([rows])
 
 
 def read_admitted(spark: SparkSession, target: str) -> DataFrame:
